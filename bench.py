@@ -17,7 +17,6 @@ Modes:
 
 from __future__ import annotations
 
-import re
 import json
 import os
 import shutil
@@ -122,9 +121,13 @@ def bench_er_pipeline(spark) -> dict:
     wh = tempfile.mkdtemp(prefix="webr_bench_wh_")
     try:
         t0 = time.monotonic()
-        out = Pipeline(spark, wh, input_id=f"bench-{ER_SCALE}").run(pages)
+        pipe = Pipeline(spark, wh, input_id=f"bench-{ER_SCALE}")
+        out = pipe.run(pages)
         n_clusters = out["entities"].count()
         wall = time.monotonic() - t0
+        # per-stage build+write walls, as the stage manifests record them
+        stages = {s: pipe.wh.manifest(s)["build_s"]
+                  for s in Pipeline.STAGES}
     finally:
         shutil.rmtree(wh, ignore_errors=True)
     return {
@@ -132,6 +135,7 @@ def bench_er_pipeline(spark) -> dict:
         "er_pages": n_pages,
         "er_clusters": int(n_clusters),
         "pages_per_sec": round(n_pages / wall, 2),
+        "stages": stages,
     }
 
 
@@ -194,13 +198,12 @@ def _host_ceiling(lo: int, hi: int, units: int | None = None) -> dict:
 
 
 def _run_er_leg(cores: int) -> dict:
-    """One pinned --er-only pipeline run at `cores` cores. Captures the
-    per-stage walls (WEBR_STAGE_TIMING prints from the warehouse stage
-    builder) so the scaling report can show WHICH stage stops scaling
-    first, not just the end-to-end ratio."""
+    """One pinned --er-only pipeline run at `cores` cores. Its result
+    carries the per-stage walls from the stage manifests, so the scaling
+    report can show WHICH stage stops scaling first, not just the
+    end-to-end ratio. One attempt: a failed leg raises, never retries."""
     env = dict(os.environ,
                SPARK_GRAFT_CPUS=str(cores),
-               WEBR_STAGE_TIMING="1",
                WEBR_SHUFFLE_PARTITIONS=str(max(2 * cores, 16)))
     # taskset pins the whole process tree (JVM + GC/shuffle threads +
     # forked python workers) to exactly `cores` CPUs: without it the
@@ -208,26 +211,17 @@ def _run_er_leg(cores: int) -> dict:
     # the efficiency ratio is fiction.
     pin = ["taskset", "-c", f"0-{cores - 1}"] \
         if shutil.which("taskset") else []
-    for attempt in range(2):  # one retry: a leg lost to a transient
-        # host hiccup shouldn't abort a multi-leg invocation
-        p = subprocess.run(
-            pin + [sys.executable, os.path.abspath(__file__), "--er-only"],
-            capture_output=True, text=True, env=env, timeout=3600)
-        lines = [ln for ln in p.stdout.strip().splitlines()
-                 if ln.startswith("{")]
-        if lines:
-            res = json.loads(lines[-1])
-            stages = {}
-            for ln in p.stdout.splitlines():
-                m = re.match(r"\[stage\] (\w+): ([0-9.]+)s", ln.strip())
-                if m:
-                    stages[m.group(1)] = float(m.group(2))
-            res["stages"] = stages
-            return res
-        print(f"[leg local[{cores}] attempt {attempt}] no result; "
-              f"stderr tail:\n" + "\n".join(
-                  p.stderr.strip().splitlines()[-15:]), file=sys.stderr)
-    raise RuntimeError(f"er leg at {cores} cores failed twice")
+    p = subprocess.run(
+        pin + [sys.executable, os.path.abspath(__file__), "--er-only"],
+        capture_output=True, text=True, env=env, timeout=3600)
+    lines = [ln for ln in p.stdout.strip().splitlines()
+             if ln.startswith("{")]
+    if p.returncode or not lines:
+        raise RuntimeError(
+            f"er leg at local[{cores}] failed (exit {p.returncode}); "
+            "stderr tail:\n" + "\n".join(
+                p.stderr.strip().splitlines()[-15:]))
+    return json.loads(lines[-1])
 
 
 def main_scaling() -> None:
@@ -375,20 +369,25 @@ the round-3 judge flagged one-shot probes as unauditable. Reproduce:
             lines.append(f"| stage | local[{lo}] (s) | local[{hi}] (s) "
                          f"| stage speedup | share @ local[{hi}] |\n"
                          "|---|---|---|---|---|")
-            tot_hi = sum(st_hi.values()) or 1.0
+            wall_hi = p["best"][hi]["er_pipeline_sec"] or 1.0
             for st in [s for s in
                        ("mentions", "idf", "mention_feats", "pairs",
                         "pair_scores", "clusters", "entities")
                        if s in st_lo and s in st_hi]:
                 sp = round(st_lo[st] / st_hi[st], 2) if st_hi[st] else None
+                mark = (" ‖" if st in ("idf", "mention_feats", "pairs")
+                        else "")
                 lines.append(
-                    f"| {st} | {st_lo[st]} | {st_hi[st]} | {sp}× "
-                    f"| {100 * st_hi[st] / tot_hi:.0f}% |")
+                    f"| {st}{mark} | {st_lo[st]} | {st_hi[st]} | {sp}× "
+                    f"| {100 * st_hi[st] / wall_hi:.0f}% |")
             lines.append(
                 "\n(stage speedup = lo-leg wall / hi-leg wall for the ★ "
                 "legs — identifies which stage stops scaling first; "
-                "share = that stage's fraction of the hi leg's summed "
-                "stage wall.)")
+                "share = that stage's wall over the hi leg's pipeline "
+                "wall. ‖ = concurrent: idf → mention_feats runs alongside "
+                "pairs, so those walls overlap and include cross-branch "
+                "contention — their shares are not additive and their "
+                "speedups are not comparable to a serial schedule.)")
     lines.append(f"""
 ## Reading the numbers
 

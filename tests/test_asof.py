@@ -27,15 +27,16 @@ def _run(spark, rows):
 
 def test_cli_stats_reads_manifests_without_spark(tmp_path, capsys):
     """`python -m webr stats` audits a warehouse from the manifests
-    alone — no SparkSession. Craft two stage manifests and assert rows,
-    per-file counters, observe counters, and lineage all surface."""
+    alone — no SparkSession. Craft stage manifests and assert rows,
+    build wall, per-file counters, observe counters, and lineage all
+    surface, and that a torn manifest is reported, not raised."""
     import json
 
     from webr.__main__ import main
 
     for t, man in {
         "mentions": {"rows": 10, "snapshot": "abc123def456789",
-                     "lineage": {"input": "x"},
+                     "build_s": 1.25, "lineage": {"input": "x"},
                      "partitions": [{"path": "a.parquet", "rows": 6},
                                     {"path": "b.parquet", "rows": 4}],
                      "counters": {"parse_ok": 9, "parse_fail": 1}},
@@ -45,9 +46,12 @@ def test_cli_stats_reads_manifests_without_spark(tmp_path, capsys):
         d = tmp_path / t
         d.mkdir()
         (d / "_manifest.json").write_text(json.dumps(man))
+    (tmp_path / "pairs").mkdir()
+    (tmp_path / "pairs" / "_manifest.json").write_text('{"rows": 1')
     assert main(["stats", "--warehouse", str(tmp_path)]) == 0
     out = capsys.readouterr().out
-    assert "mentions: rows=10 snapshot=abc123def456" in out
+    assert "mentions: rows=10 snapshot=abc123def456 build_s=1.25" in out
+    assert "pairs: unreadable manifest" in out
     assert "files=2 rows/file min=4 max=6" in out
     assert "counters=parse_fail=1,parse_ok=9" in out
     assert "lineage<-mentions" in out

@@ -120,6 +120,9 @@ def test_resume_from_checkpoint(spark, pages_df, oracle_result,
     assert cnt["rows_out"] == pipe.wh.manifest("mentions")["rows"]
     assert cnt["parse_ok"] + cnt["parse_fail"] == cnt["rows_out"]
     assert cnt["parse_ok"] > 0
+    # every stage manifest records its build+write wall
+    for tbl in Pipeline.STAGES:
+        assert pipe.wh.manifest(tbl)["build_s"] >= 0, tbl
 
     # "kill" after pair_scores: downstream tables are lost
     pipe.wh.drop("clusters")
@@ -134,6 +137,51 @@ def test_resume_from_checkpoint(spark, pages_df, oracle_result,
     assert man_pairs_before["snapshot"] == man_pairs_after["snapshot"]
     assert (cl1.cluster_id.values == cl2.cluster_id.values).all()
     assert (cl1.url.values == cl2.url.values).all()
+
+
+def test_torn_manifest_rebuilds_stage(spark, pages_df, warehouse_dir):
+    """A manifest torn mid-write (a kill during the write on a non-atomic
+    filesystem) must read as absent: the rerun rebuilds that stage
+    instead of raising, and the clusters are unchanged."""
+    import os
+
+    from webr.engine import Pipeline
+    cl1 = _clusters_pd(
+        Pipeline(spark, warehouse_dir, input_id="torn-v1").run(pages_df))
+    path = os.path.join(warehouse_dir, "pairs", "_manifest.json")
+    with open(path) as f:
+        text = f.read()
+    with open(path, "w") as f:
+        f.write(text[:len(text) // 2])
+    pipe = Pipeline(spark, warehouse_dir, input_id="torn-v1")
+    assert pipe.wh.manifest("pairs") is None
+    cl2 = _clusters_pd(pipe.run(pages_df))
+    assert pipe.wh.manifest("pairs")["rows"] > 0    # rebuilt
+    assert (cl1.url.values == cl2.url.values).all()
+    assert (cl1.cluster_id.values == cl2.cluster_id.values).all()
+
+
+def test_failed_branch_fails_fast(spark, pages_df, warehouse_dir,
+                                  monkeypatch):
+    """A failure in one overlapped branch surfaces as that error, and the
+    sibling branch stops before its next stage (its running jobs are
+    cancelled), so mention_feats is never written."""
+    import webr.engine
+    from webr.engine import Pipeline
+
+    class Boom(RuntimeError):
+        pass
+
+    def build_pairs(_mentions):
+        raise Boom("pairs branch failed")
+
+    monkeypatch.setattr(webr.engine, "build_pairs", build_pairs)
+    pipe = Pipeline(spark, warehouse_dir, input_id="failfast-v1")
+    with pytest.raises(Boom):
+        pipe.run(pages_df)
+    assert pipe.wh.manifest("mention_feats") is None
+    assert pipe.wh.manifest("pairs") is None
+    assert spark.range(3).count() == 3    # the session is still usable
 
 
 def test_entities_canonical(pipeline_out, oracle_result, corpus_pd):

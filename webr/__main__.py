@@ -89,11 +89,13 @@ def cmd_query(args) -> int:
 
 def cmd_stats(args) -> int:
     """Operability view of the warehouse: per-stage snapshot, row count,
-    lineage edges, per-partition file counters, and observe() counters —
-    everything a resume-after-failure needs to audit WITHOUT launching a
-    SparkSession (manifests are plain JSON next to the parquet)."""
-    import json
+    build wall, lineage edges, per-partition file counters, and observe()
+    counters — everything a resume-after-failure needs to audit WITHOUT
+    launching a SparkSession (manifests are plain JSON next to the
+    parquet). A torn or unreadable manifest is reported and skipped."""
     import os
+
+    from webr.catalog import read_manifest
 
     root = args.warehouse
     tables = sorted(
@@ -104,8 +106,10 @@ def cmd_stats(args) -> int:
         print(f"no stage manifests under {root}", file=sys.stderr)
         return 1
     for t in tables:
-        with open(os.path.join(root, t, "_manifest.json")) as f:
-            man = json.load(f)
+        man = read_manifest(os.path.join(root, t, "_manifest.json"))
+        if man is None:
+            print(f"{t}: unreadable manifest")
+            continue
         parts = man.get("partitions") or []
         skew = ""
         if parts:
@@ -120,7 +124,8 @@ def cmd_stats(args) -> int:
         lstr = (" lineage<-" + ",".join(sorted(lineage))
                 if lineage else "")
         print(f"{t}: rows={man.get('rows')} "
-              f"snapshot={str(man.get('snapshot'))[:12]}{skew}{cstr}{lstr}")
+              f"snapshot={str(man.get('snapshot'))[:12]} "
+              f"build_s={man.get('build_s')}{skew}{cstr}{lstr}")
     return 0
 
 

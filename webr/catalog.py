@@ -35,6 +35,26 @@ def fingerprint(*parts: str) -> str:
     return h.hexdigest()[:16]
 
 
+def read_manifest(path: str) -> dict | None:
+    """A manifest file's contents, or None when it is missing or
+    unreadable (e.g. torn by a crash before atomic writes)."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return None
+
+
+def _write_json_atomic(path: str, obj: dict) -> None:
+    """Write ``obj`` to a sibling temp file and ``os.replace`` it into
+    place, so a kill mid-write leaves the old file or none, never a
+    truncated one."""
+    tmp = f"{path}.tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=1)
+    os.replace(tmp, path)
+
+
 class Warehouse:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -50,11 +70,9 @@ class Warehouse:
 
     # -- manifest ---------------------------------------------------------
     def manifest(self, table: str) -> dict | None:
-        p = self._manifest_path(table)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
+        """None when missing or unreadable — either way the stage
+        rebuilds instead of wedging the resume."""
+        return read_manifest(self._manifest_path(table))
 
     def has_snapshot(self, table: str, snapshot: str) -> bool:
         m = self.manifest(table)
@@ -64,8 +82,11 @@ class Warehouse:
     def write(self, table: str, df: DataFrame, snapshot: str,
               lineage: dict | None = None,
               partition_by: list[str] | None = None,
-              observation=None) -> DataFrame:
-        """Write + manifest. ``observation``: a pyspark Observation
+              observation=None, started: float | None = None) -> DataFrame:
+        """Write + manifest. ``started``: ``time.monotonic()`` when the
+        stage's build began; ``build_s`` in the manifest is the wall from
+        then (default: from the start of this write) to the manifest
+        write. ``observation``: a pyspark Observation
         already attached to ``df`` via ``df.observe`` — its metrics are
         collected AFTER the parquet write (the action that populates
         it) and recorded as ``counters``, costing zero extra jobs.
@@ -76,6 +97,8 @@ class Warehouse:
         the Iceberg per-manifest-entry stats analog (north_rule
         "per-partition lineage + metrics"; reference analog: the
         inspectable per-block files of extract_blocks.py:64-71)."""
+        if started is None:
+            started = time.monotonic()
         d = self._dir(table)
         data = os.path.join(d, "data")
         if os.path.exists(d):
@@ -109,9 +132,9 @@ class Warehouse:
             "schema": out.schema.json(),
             "lineage": lineage or {},
             "written_unix": int(time.time()),
+            "build_s": round(time.monotonic() - started, 3),
         }
-        with open(self._manifest_path(table), "w") as f:
-            json.dump(man, f, indent=1)
+        _write_json_atomic(self._manifest_path(table), man)
         return out
 
     def read(self, table: str) -> DataFrame:
@@ -176,8 +199,7 @@ class Warehouse:
         # final state lands in ONE rename of a fully-consistent dir
         man = self.manifest(tmp)
         man["table"] = table
-        with open(self._manifest_path(tmp), "w") as f:
-            json.dump(man, f, indent=1)
+        _write_json_atomic(self._manifest_path(tmp), man)
         # crash-safe swap: old table stays intact under __old until the
         # staged dir is in place — a failure window leaves either the old
         # table (pre-first-rename) or a recoverable __old backup, never a
@@ -203,19 +225,10 @@ class Warehouse:
         """Return checkpointed stage output; rebuild only when the
         snapshot fingerprint (spec + upstream lineage) changed.
         ``observation`` is only consumed when the stage actually
-        rebuilds (a resumed checkpoint never triggered the action)."""
+        rebuilds (a resumed checkpoint never triggered the action). The
+        manifest's ``build_s`` covers build plus write."""
         if self.has_snapshot(table, snapshot):
             return self.read(table)
         t0 = time.monotonic()
-        out = self.write(table, build(), snapshot, lineage, partition_by,
-                         observation=observation)
-        if os.environ.get("WEBR_STAGE_TIMING"):
-            # single write incl. newline: stages may finish concurrently
-            # (overlapped pipeline branches) and interleaved partial
-            # lines would garble the bench harness's per-stage parse
-            import sys
-            sys.stdout.write(
-                f"[stage] {table}: {time.monotonic() - t0:.2f}s "
-                f"rows={self.manifest(table)['rows']}\n")
-            sys.stdout.flush()
-        return out
+        return self.write(table, build(), snapshot, lineage, partition_by,
+                          observation=observation, started=t0)

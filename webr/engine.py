@@ -17,9 +17,10 @@ fingerprint, so a killed job resumes from the last complete stage
 from __future__ import annotations
 
 import math
-import os
-from concurrent.futures import ThreadPoolExecutor
-from typing import Iterator
+import threading
+import uuid
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+from typing import Callable, Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -28,10 +29,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from webr import schema, spec
 from webr.catalog import Warehouse, fingerprint
 from webr.cluster import label_clusters
-from webr.features import score_pairs, weight_arrays
+from webr.features import weight_arrays
 from webr.mentions import derive_mentions
-
-SIDE_COLS = [f.name for f in schema.MENTION_FEATS.fields if f.name != "url"]
 
 # Arrow twin of schema.PAIR_SCORES for the applyInArrow pair-scoring
 # path — derived via Spark's own converter so the two can never drift.
@@ -79,8 +78,7 @@ def build_idf(mentions: DataFrame, n_mentions: int) -> DataFrame:
 # with 32 workers per host that is the practical executor-memory ceiling
 # (a 5M cap measured ~0.5-1 GB/worker). The fallback is bitwise-identical
 # (tested), so the cap trades only a little speed, never correctness.
-VOCAB_BROADCAST_MAX = int(os.environ.get("WEBR_VOCAB_BROADCAST_MAX",
-                                         "1000000"))
+VOCAB_BROADCAST_MAX = 1_000_000
 
 
 def build_mention_feats(mentions: DataFrame, idf: DataFrame,
@@ -200,51 +198,31 @@ def build_pairs(mentions: DataFrame) -> DataFrame:
             .agg(F.min("bk").alias("block_key")))
 
 
-def attach_sides(pairs: DataFrame, mention_feats: DataFrame) -> DataFrame:
-    m = mention_feats.select("url", *SIDE_COLS)
-    m1 = m.select(F.col("url").alias("url_1"),
-                  *[F.col(c).alias(f"{c}_1") for c in SIDE_COLS])
-    m2 = m.select(F.col("url").alias("url_2"),
-                  *[F.col(c).alias(f"{c}_2") for c in SIDE_COLS])
-    out = (pairs.join(m1.hint("shuffle_hash"), "url_1")
-           .join(m2.hint("shuffle_hash"), "url_2"))
-    return out.select([f.name for f in schema.PAIRS.fields])
-
-
-def build_pair_scores(pairs_sided: DataFrame) -> DataFrame:
-    names = [f.name for f in schema.PAIR_SCORES.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = score_pairs(pdf)
-            yield out[names]
-    return pairs_sided.mapInPandas(gen, schema=schema.PAIR_SCORES)
-
-
-# coarse cogroup salt: pair-scoring tasks each handle ~(pairs/GROUPS)
-# pairs. Scale note: at 100 TB raise via env (or derive from the pairs
-# stage row count) so a group stays ~10^5 pairs; block integrity is NOT
+# floor of the coarse cogroup salt: pair-scoring tasks each handle
+# ~(pairs/groups) pairs. Pipeline.run raises the count from the pairs
+# stage row count so a group stays ~10^5 pairs; block integrity is NOT
 # required by the kernel, so the salt can split arbitrarily fine.
-PAIR_SCORE_GROUPS = int(os.environ.get("WEBR_PAIR_SCORE_GROUPS", "1024"))
+PAIR_SCORE_GROUPS = 1024
 
 
 def build_pair_scores_grouped(pairs: DataFrame, mention_feats: DataFrame,
                               groups: int = PAIR_SCORE_GROUPS) -> DataFrame:
     """Pair scoring without the per-pair feature blow-up.
 
-    ``attach_sides`` ships BOTH mentions' weight arrays once per pair —
-    with avg pair-degree ~25 that is a ~25x amplification of the fat
-    array payload through the join shuffle AND the JVM→Arrow→Python
-    hop, which makes the stage memory-bandwidth-bound (it stops scaling
-    with cores, and at 100 TB it is the dominant shuffle).
+    Joining both mentions' features onto every pair would ship each
+    mention's weight arrays once per pair — with avg pair-degree ~25 a
+    ~25x amplification of the fat array payload through the join
+    shuffle AND the JVM→Arrow→Python hop, which makes the stage
+    memory-bandwidth-bound (it stops scaling with cores, and at 100 TB
+    it is the dominant shuffle).
 
     Instead: key every pair by a coarse group (hash of its block_key),
     build the distinct (group, url) membership, join mention_feats ONCE
-    per member, and cogroup(pairs, member_feats) → applyInPandas. Each
-    mention's arrays now cross the wire once per block it actually
-    pairs in (~1-3x) instead of once per pair (~25x). The Python side
-    reassembles the sided frame with O(1) indexer lookups and calls the
-    SAME ``score_pairs`` kernel — bitwise-identical output rows.
+    per member, and cogroup(pairs, member_feats) → applyInArrow. Each
+    mention's arrays cross the wire once per block it actually pairs
+    in (~1-3x) instead of once per pair (~25x). The Python side indexes
+    members per pair and calls ``score_pairs_indexed_vec``, the bitwise
+    twin of the oracle's ``score_pairs`` kernel.
 
     The coarse salt bounds per-task group size: blocks hashing to the
     same group are scored together (the kernel is per-pair, so group
@@ -429,6 +407,53 @@ def build_entities(mentions: DataFrame, idf: DataFrame,
 # --------------------------------------------------------------------------
 # orchestrated, checkpointed run
 
+class _BranchCancelled(RuntimeError):
+    """Raised inside a pipeline branch once a sibling branch has failed."""
+
+
+def _run_branches(sc, *branches: Callable) -> list:
+    """Run independent pipeline branches from concurrent driver threads so
+    their Spark jobs share the executor pool instead of running
+    back-to-back: serial stage latency costs the same wall at every
+    cluster width (with FIFO scheduling a later job fills whatever task
+    slots the front job leaves idle). Returns the branch results in order.
+
+    Fail fast: each branch's jobs carry their own job tag, and each branch
+    is called with ``checkpoint()``, which it calls before every stage.
+    When a branch raises, a stop flag makes the siblings' next
+    ``checkpoint()`` raise ``_BranchCancelled``, and their running jobs
+    are cancelled by tag (the flag covers a job submitted after the
+    cancel, which the tag cancel would miss). The first branch's
+    exception is re-raised, never a sibling's cancellation error."""
+    stop = threading.Event()
+    run_id = uuid.uuid4().hex
+    tags = [f"webr-branch-{run_id}-{i}" for i in range(len(branches))]
+
+    def checkpoint() -> None:
+        if stop.is_set():
+            raise _BranchCancelled("a sibling pipeline branch failed")
+
+    def run(tag: str, branch: Callable):
+        sc.addJobTag(tag)
+        try:
+            return branch(checkpoint)
+        finally:
+            sc.removeJobTag(tag)
+
+    with ThreadPoolExecutor(max_workers=len(branches)) as ex:
+        futs = [ex.submit(run, t, b) for t, b in zip(tags, branches)]
+        done, _ = wait(futs, return_when=FIRST_EXCEPTION)
+        failed = [f for f in futs if f in done and f.exception()]
+        if failed:
+            stop.set()
+            for f, tag in zip(futs, tags):
+                if f not in done:
+                    sc.cancelJobsWithTag(tag)
+    if failed:
+        raise failed[0].exception()
+    return [f.result() for f in futs]
+
+
 class Pipeline:
     """Checkpointed ER pipeline over a Warehouse. ``input_id`` must change
     when the input data changes (e.g. path + row count); every stage
@@ -466,24 +491,20 @@ class Pipeline:
 
         # idf -> mention_feats and pairs both depend only on the
         # materialized mentions checkpoint — two independent DAG
-        # branches. Build them from two driver threads so their Spark
-        # jobs share the executor pool instead of running back-to-back:
-        # serial stage latency costs the same wall at every cluster
-        # width, so overlapping it is what keeps N -> 4N scaling honest
-        # (concurrent actions on one SparkSession are supported; with
-        # FIFO scheduling a later job fills whatever task slots the
-        # front job leaves idle). Snapshots/lineage are unchanged, so
-        # resume semantics and outputs are identical to the serial
-        # order, and each branch is internally sequential.
+        # branches, built concurrently (see _run_branches). Snapshots and
+        # lineage do not depend on the schedule, so resume semantics and
+        # outputs are those of the serial order.
         s_idf = self.snap("idf", s_m)
         s_mi = self.snap("mention_feats", s_m, s_idf)
         s_p = self.snap("pairs", s_m)
 
-        def _branch_feats() -> tuple[DataFrame, DataFrame]:
+        def _branch_feats(checkpoint) -> tuple[DataFrame, DataFrame]:
+            checkpoint()
             idf = wh.stage("idf", s_idf,
                            lambda: build_idf(mentions, n_mentions),
                            lineage={"mentions": s_m})
             n_vocab = wh.manifest("idf")["rows"]
+            checkpoint()
             mf = wh.stage(
                 "mention_feats", s_mi,
                 lambda: build_mention_feats(mentions, idf,
@@ -491,24 +512,18 @@ class Pipeline:
                 lineage={"mentions": s_m, "idf": s_idf})
             return idf, mf
 
-        def _branch_pairs() -> DataFrame:
+        def _branch_pairs(checkpoint) -> DataFrame:
+            checkpoint()
             return wh.stage("pairs", s_p, lambda: build_pairs(mentions),
                             lineage={"mentions": s_m})
 
-        if os.environ.get("WEBR_OVERLAP_STAGES", "1") != "0":
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                fut_feats = ex.submit(_branch_feats)
-                fut_pairs = ex.submit(_branch_pairs)
-                idf, mention_feats = fut_feats.result()
-                pairs = fut_pairs.result()
-        else:
-            idf, mention_feats = _branch_feats()
-            pairs = _branch_pairs()
+        (idf, mention_feats), pairs = _run_branches(
+            self.spark.sparkContext, _branch_feats, _branch_pairs)
 
         # scoring salt sized from the MATERIALIZED pair count (the pairs
         # manifest already knows it — no extra job): ~100k pairs/group
         # keeps every task's member+pair batch bounded at any corpus
-        # size; WEBR_PAIR_SCORE_GROUPS remains the floor. Group
+        # size; PAIR_SCORE_GROUPS remains the floor. Group
         # composition never changes output (the kernel is per-pair).
         n_pairs = wh.manifest("pairs")["rows"]
         groups = max(PAIR_SCORE_GROUPS, min(1 << 20, n_pairs // 100_000))
