@@ -81,39 +81,49 @@ def build_idf(mentions: DataFrame, n_mentions: int) -> DataFrame:
 VOCAB_BROADCAST_MAX = 1_000_000
 
 
+# MENTION_FEATS minus the three weight columns mention_feats_batch adds
+_SLIM_COLS = [f.name for f in schema.MENTION_FEATS.fields
+              if not f.name.startswith("w_")]
+
+
+def mention_feats_batch(mentions: pd.DataFrame, idf: dict) -> pd.DataFrame:
+    """One batch of mentions -> MENTION_FEATS rows: body tokens become the
+    shared ``weight_arrays`` kernel's sorted tf-idf arrays + norm. ``idf``
+    needs only the batch's tokens (a missing token weighs 0.0 either way),
+    so the record query passes just the idf rows of its own tokens."""
+    arrays = [weight_arrays(list(t), idf) for t in mentions["body_toks"]]
+    out = mentions[_SLIM_COLS].copy()
+    out["w_toks"] = [a[0] for a in arrays]
+    out["w_vals"] = [a[1] for a in arrays]
+    out["w_norm"] = [a[2] for a in arrays]
+    return out
+
+
 def build_mention_feats(mentions: DataFrame, idf: DataFrame,
-                        vocab_rows: int | None = None) -> DataFrame:
+                        vocab_rows: int) -> DataFrame:
     """Slim per-mention pair-kernel payload with PRECOMPUTED sorted tf-idf
     weight arrays + norm (int64 token ids — see features.token_hash).
+    ``vocab_rows`` is the idf table's row count (the caller has it from
+    the idf stage's manifest).
 
     Fast path (vocab fits executor memory): broadcast the idf table as a
-    dict into ONE Arrow mapInPandas pass over mentions calling the shared
-    ``weight_arrays`` kernel — zero shuffles (the reference's module-global
+    dict into ONE Arrow mapInPandas pass over mentions calling
+    ``mention_feats_batch`` — zero shuffles (the reference's module-global
     idf dict, ref util/utils.py:45-122, done properly as a broadcast
     variable). Scale path (vocab > VOCAB_BROADCAST_MAX, e.g. 10^12-doc
     corpora): distributed explode + broadcast-hash token join + sorted
     struct re-aggregation, bit-identical by construction (same hash, same
     sort order, same in-order fold)."""
-    if vocab_rows is None:
-        vocab_rows = idf.count()
     if vocab_rows <= VOCAB_BROADCAST_MAX:
         idf_map = {r["token"]: r["idf"] for r in
                    idf.select("token", "idf").collect()}
         bc = mentions.sparkSession.sparkContext.broadcast(idf_map)
-        slim = mentions.select(
-            "url", "warc_ts", "doc_id", "host", "first", "middle", "last",
-            "name_norm", "title_toks", "body_toks")
+        slim = mentions.select(*_SLIM_COLS, "body_toks")
 
         def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             d = bc.value
             for pdf in batches:
-                arrays = [weight_arrays(list(t), d)
-                          for t in pdf["body_toks"]]
-                pdf = pdf.drop(columns=["body_toks"])
-                pdf["w_toks"] = [a[0] for a in arrays]
-                pdf["w_vals"] = [a[1] for a in arrays]
-                pdf["w_norm"] = [a[2] for a in arrays]
-                yield pdf[[f.name for f in schema.MENTION_FEATS.fields]]
+                yield mention_feats_batch(pdf, d)
 
         return slim.mapInPandas(gen, schema=schema.MENTION_FEATS)
     return _build_mention_feats_join(mentions, idf)

@@ -36,3 +36,17 @@ def duck_tokens_nostop(col: str = "text") -> str:
 
 def read(spark, sf_dir: str, table: str):
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+
+
+# documents row count per sf dir. The testdata tables are immutable, so
+# one count job per (app, dir) suffices — otherwise every query that
+# needs N pays a count job before its real work. At 100 TB this is
+# table-stat metadata (a parquet-footer read), not a scan.
+_NDOCS_CACHE: dict[tuple[str, str], int] = {}
+
+
+def doc_count(spark, sf_dir: str) -> int:
+    key = (spark.sparkContext.applicationId, sf_dir)
+    if key not in _NDOCS_CACHE:
+        _NDOCS_CACHE[key] = read(spark, sf_dir, "documents").count()
+    return _NDOCS_CACHE[key]

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from webr import spec
 from webr.queries.common import (
-    duck_tokens_nostop, read, spark_tokens_nostop,
+    doc_count, duck_tokens_nostop, read, spark_tokens_nostop,
 )
 
 # shared fragments -----------------------------------------------------------
@@ -350,7 +350,7 @@ def q_doc_idf(spark: SparkSession, sf: str) -> DataFrame:
     d = _docs_with_tokens(spark, sf)
     # count the raw table, not the tokenized frame: same N, but the scan
     # stays footer-only instead of re-running tokenization
-    n = read(spark, sf, "documents").count()
+    n = doc_count(spark, sf)
     tok = d.select("doc_id", F.explode("tset").alias("token"))
     return (tok.groupBy("token").agg(F.count("*").alias("df"))
             .withColumn("idf", F.round(F.log(F.lit(float(n)) / F.col("df")),
@@ -374,7 +374,7 @@ def q_doc_cosine_topk(spark: SparkSession, sf: str) -> DataFrame:
     token between query docs (doc_id % 100 == 0) and the corpus, window
     top-3 per query. Fully JVM-side (no UDF)."""
     d = _docs_with_tokens(spark, sf)
-    n = read(spark, sf, "documents").count()
+    n = doc_count(spark, sf)
     tf = (d.select("doc_id", F.explode("toks").alias("token"))
           .groupBy("doc_id", "token").agg(F.count("*").alias("tf")))
     idf = (tf.groupBy("token").agg(F.countDistinct("doc_id").alias("df"))

@@ -26,31 +26,17 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from webr.links import extract_links, pagerank, synth_link_html
-from webr.queries.common import read
+from webr.queries.common import doc_count, read
 
 _PR_ITERS = 5
 _PR_DAMPING = 0.85
-
-
-# documents row count per sf dir. The testdata tables are immutable, so
-# one count job per (app, dir) suffices — previously EVERY link-query
-# invocation paid a count job before its real work. At 100 TB this is
-# table-stat metadata (a parquet-footer read), not a scan.
-_NDOCS_CACHE: dict[tuple[str, str], int] = {}
-
-
-def _n_docs(spark: SparkSession, sf: str) -> int:
-    key = (spark.sparkContext.applicationId, sf)
-    if key not in _NDOCS_CACHE:
-        _NDOCS_CACHE[key] = read(spark, sf, "documents").count()
-    return _NDOCS_CACHE[key]
 
 
 def _link_rows(spark: SparkSession, sf: str) -> tuple[DataFrame, int]:
     """(src, href, anchor) rows from the real extractor over the
     synthesized corpus HTML."""
     d = read(spark, sf, "documents").select("doc_id")
-    n_docs = _n_docs(spark, sf)
+    n_docs = doc_count(spark, sf)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -11,121 +11,139 @@ Two stages, exactly the reference's shape:
      when the cluster has <2 members) (ref :95-127, A7), ranked by votes
      desc then stage-1 cosine, top-K (W1).
 
-The query side is tiny => broadcast joins against the entity/member tables.
+A query batch is small and the corpus is not, so the split is by size:
+everything sized by the batch runs on the driver through the shared
+kernels, and the corpus tables are read only through filtered scans
+(point lookups by token, name key and cluster id) — no Python worker, no
+shuffle of a corpus table, no whole-vocabulary broadcast.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
+import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 
-from webr import schema, spec
-from webr.engine import build_mention_feats, build_mentions
-from webr.features import score_pairs, sparse_cosine_sorted
+from webr import spec
+from webr.engine import mention_feats_batch
+from webr.features import (
+    MEMBER_COLUMNS, score_pairs_indexed, sparse_cosine_sorted, token_hash,
+)
+from webr.mentions import derive_mentions
 
-
-def prepare_query_mentions(query_pages: DataFrame,
-                           idf: DataFrame) -> DataFrame:
-    """Same extract/normalize/weights path as the corpus (shared kernels),
-    with the CORPUS idf (a query must not shift corpus statistics)."""
-    mentions = build_mentions(query_pages)
-    return build_mention_feats(mentions, idf)
+RESULT_SCHEMA = ("q_url string, cluster_id long, votes long, "
+                 "cluster_cos double, rank int")
 
 
-def _stage1(query_feats: DataFrame, entities: DataFrame) -> DataFrame:
-    q = query_feats.select(
-        F.col("url").alias("q_url"),
-        F.col("last").alias("q_last"),
-        F.substring("first", 1, 1).alias("q_fi"),
-        "first", "middle", "name_norm", "title_toks", "host", "doc_id",
-        "w_toks", "w_vals", "w_norm")
-    cand = (F.broadcast(q).join(
+def _query_feats(query_pages: DataFrame, idf: DataFrame) -> pd.DataFrame:
+    """The batch's MENTION_FEATS rows, built on the driver by the corpus's
+    own extract and weight kernels with the CORPUS idf (a query must not
+    shift corpus statistics). Only the idf rows of the batch's tokens are
+    fetched. A url submitted twice in one batch is matched once."""
+    cols = ["url", "html", "text"]
+    if "warc_ts" in query_pages.columns:
+        cols.append("warc_ts")
+    pages = query_pages.select(*cols).toPandas().drop_duplicates("url")
+    mentions = derive_mentions(pages.reset_index(drop=True))
+    toks = sorted({t for ts in mentions["body_toks"] for t in ts})
+    idf_map = {}
+    if toks:
+        idf_map = {r["token"]: r["idf"] for r in
+                   idf.where(_token_in(toks))
+                   .select("token", "idf").collect()}
+    return mention_feats_batch(mentions, idf_map)
+
+
+def _token_in(toks: list[str]) -> Column:
+    """``token IN (...)`` parsed from ONE SQL string. ``Column.isin``
+    makes a py4j call per literal, ~0.5 ms each, and a batch has hundreds
+    of distinct tokens: it would be the largest driver cost of a request."""
+    quoted = ("'" + t.replace("\\", "\\\\").replace("'", "\\'") + "'"
+              for t in toks)
+    return F.expr(f"token IN ({', '.join(quoted)})")
+
+
+def _profile_arrays(profile: dict | None) -> tuple[list, list, float]:
+    """Entity profiles keep human-readable tokens; hash them to the same
+    sorted int64 id space as the mention weight arrays."""
+    entries = sorted((token_hash(t), v) for t, v in (profile or {}).items())
+    vals = [v for _, v in entries]
+    acc = 0.0
+    for v in vals:
+        acc += v * v
+    return [h for h, _ in entries], vals, acc ** 0.5
+
+
+def _candidates(qf: pd.DataFrame, entities: DataFrame) -> pd.DataFrame:
+    """Stage 1: (q_url, cluster_id, n_members, cluster_cos) of the
+    clusters sharing a query's name key and passing the profile-cosine
+    gate. The name-key join runs in Spark with the batch's keys
+    broadcast; the cosine runs here."""
+    spark = entities.sparkSession
+    keys = spark.createDataFrame(
+        pd.DataFrame({"q_url": qf["url"], "q_last": qf["last"],
+                      "q_first": qf["first"]}),
+        "q_url string, q_last string, q_first string")
+    q = keys.select("q_url", "q_last",
+                    F.substring("q_first", 1, 1).alias("q_fi"))
+    rows = (F.broadcast(q).join(
         entities,
         (q.q_last == entities.last)
         & ((q.q_fi == entities.first_initial) | (q.q_fi == F.lit(""))
-           | (entities.first_initial == F.lit("")))))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from webr.features import token_hash
-        for pdf in batches:
-            cos = []
-            for toks, vals, nrm, prof in zip(
-                    pdf["w_toks"], pdf["w_vals"], pdf["w_norm"],
-                    pdf["profile"]):
-                prof = prof if isinstance(prof, dict) else {}
-                # entity profiles keep human-readable tokens; hash to the
-                # same int64 id space as the mention weight arrays
-                entries = sorted((token_hash(t), v) for t, v in prof.items())
-                p_toks = [h for h, _ in entries]
-                p_vals = [v for _, v in entries]
-                acc = 0.0
-                for v in p_vals:
-                    acc += v * v
-                cos.append(sparse_cosine_sorted(
-                    list(toks), list(vals), nrm, p_toks, p_vals,
-                    acc ** 0.5))
-            pdf = pdf.copy()
-            pdf["cluster_cos"] = cos
-            yield pdf[["q_url", "cluster_id", "n_members", "cluster_cos"]]
-
-    out_schema = ("q_url string, cluster_id long, n_members long, "
-                  "cluster_cos double")
-    return (cand.mapInPandas(gen, out_schema)
-            .where(F.col("cluster_cos") >= spec.CLUSTER_EPS))
+           | (entities.first_initial == F.lit(""))))
+        .select("q_url", "cluster_id", "n_members", "profile")
+        .collect())
+    w = {u: (t, v, n) for u, t, v, n in
+         zip(qf["url"], qf["w_toks"], qf["w_vals"], qf["w_norm"])}
+    profiles: dict = {}
+    out = []
+    for r in rows:
+        cid = r["cluster_id"]
+        if cid not in profiles:
+            profiles[cid] = _profile_arrays(r["profile"])
+        cos = sparse_cosine_sorted(*w[r["q_url"]], *profiles[cid])
+        if cos >= spec.CLUSTER_EPS:
+            out.append((r["q_url"], cid, r["n_members"], cos))
+    return pd.DataFrame(out, columns=["q_url", "cluster_id", "n_members",
+                                      "cluster_cos"])
 
 
-def _stage2(query_feats: DataFrame, survivors: DataFrame,
-            clusters: DataFrame, mention_feats: DataFrame) -> DataFrame:
-    members = (survivors.select("q_url", "cluster_id", "n_members",
-                                "cluster_cos")
-               .join(clusters.where(~F.col("is_noise")), "cluster_id")
-               # shuffle_hash: never sort the fat weight-array side
-               # (scoped hint — see webr/session.py note)
-               .join(mention_feats.hint("shuffle_hash"), "url"))
-    qside = query_feats.select(
-        F.col("url").alias("url_1"),
-        *[F.col(c).alias(f"{c}_1")
-          for c in [f.name for f in schema.MENTION_FEATS.fields
-                    if f.name != "url"]])
-    pair_cols = [f.name for f in schema.PAIRS.fields]
-    paired = (members
-              .select(F.col("q_url").alias("url_1"),
-                      F.col("url").alias("url_2"),
-                      "cluster_id", "n_members", "cluster_cos",
-                      *[F.col(c).alias(f"{c}_2")
-                        for c in [f.name for f in schema.MENTION_FEATS.fields
-                                  if f.name != "url"]])
-              .join(F.broadcast(qside), "url_1")
-              .withColumn("block_key", F.lit("query")))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            scored = score_pairs(pdf[pair_cols])
-            out = pdf[["url_1", "url_2", "cluster_id", "n_members",
-                       "cluster_cos"]].copy()
-            out["score"] = scored["score"]
-            yield out
-
-    out_schema = ("url_1 string, url_2 string, cluster_id long, "
-                  "n_members long, cluster_cos double, score double")
-    scored = paired.mapInPandas(gen, out_schema)
-    votes = (scored.groupBy(F.col("url_1").alias("q_url"), "cluster_id",
-                            "n_members", "cluster_cos")
-             .agg(F.sum(F.when(F.col("score") >= spec.RECORD_EPS, 1)
-                        .otherwise(0)).alias("votes")))
-    min_votes = F.when(F.col("n_members") < 2, 1).otherwise(spec.MIN_VOTES)
-    ranked = (votes.where(F.col("votes") >= min_votes)
-              .withColumn("rank", F.row_number().over(
-                  Window.partitionBy("q_url").orderBy(
-                      F.desc("votes"), F.desc("cluster_cos"),
-                      F.asc("cluster_id"))))
-              .where(F.col("rank") <= spec.TOP_K))
-    return ranked.select("q_url", "cluster_id", "votes",
-                         F.round("cluster_cos", 9).alias("cluster_cos"),
-                         "rank")
+def _ranked(qf: pd.DataFrame, cand: pd.DataFrame, clusters: DataFrame,
+            mention_feats: DataFrame) -> pd.DataFrame:
+    """Stage 2: score each query against every member of its candidate
+    clusters (members fetched by a broadcast cluster-id filter on the
+    mention_feats scan), keep clusters with enough votes, rank them."""
+    cids = sorted({int(c) for c in cand["cluster_id"]})
+    if not cids:
+        return pd.DataFrame(columns=["q_url", "cluster_id", "votes",
+                                     "cluster_cos", "rank"])
+    wanted = (clusters.where(~F.col("is_noise")
+                             & F.col("cluster_id").isin(cids))
+              .select("url", "cluster_id"))
+    members = (mention_feats.join(F.broadcast(wanted), "url")
+               .select("cluster_id", *MEMBER_COLUMNS).toPandas())
+    # one member table: the batch's rows first, then the fetched members
+    memb = {c: qf[c].tolist() + members[c].tolist() for c in MEMBER_COLUMNS}
+    q_idx = {u: i for i, u in enumerate(qf["url"])}
+    by_cluster = members.groupby("cluster_id").indices
+    i1, i2, owner = [], [], []
+    for k, (qu, cid) in enumerate(zip(cand["q_url"], cand["cluster_id"])):
+        for j in by_cluster.get(cid, ()):
+            i1.append(q_idx[qu])
+            i2.append(len(qf) + int(j))
+            owner.append(k)
+    scores = score_pairs_indexed(memb, i1, i2)["score"]
+    votes = [0] * len(cand)
+    for k, s in zip(owner, scores):
+        votes[k] += s >= spec.RECORD_EPS
+    res = cand.assign(votes=votes)
+    min_votes = np.where(res["n_members"] < 2, 1, spec.MIN_VOTES)
+    res = (res[res["votes"] >= min_votes]
+           .sort_values(["q_url", "votes", "cluster_cos", "cluster_id"],
+                        ascending=[True, False, False, True]))
+    res["rank"] = res.groupby("q_url").cumcount() + 1
+    return res[res["rank"] <= spec.TOP_K]
 
 
 def match_records(query_pages: DataFrame, idf: DataFrame,
@@ -135,13 +153,36 @@ def match_records(query_pages: DataFrame, idf: DataFrame,
     clusters for each query page; empty result for a query = no match
     (ref record_based_query_exp1.py:166-174 'no-match correct').
 
-    Batch-friendly by construction: pass MANY query pages in one call and
-    the stage-1 name-key candidate join against the entity table runs
-    ONCE for the whole batch (the distributed analog of ref
-    record_based_query_exp2.py:124-150's per-name-key profile cache —
-    there the cache avoids refetching cluster profiles per query; here
-    one broadcast-join stage amortizes the same work across the batch).
-    Tested with a 100-query batch in tests/test_query.py."""
-    qf = prepare_query_mentions(query_pages, idf)
-    s1 = _stage1(qf, entities)
-    return _stage2(qf, s1, clusters, mention_feats)
+    Work sized by the batch runs on the driver with the shared kernels:
+    ``derive_mentions`` + ``mention_feats_batch`` for the query features,
+    the profile cosine (``sparse_cosine_sorted``) for stage 1, and
+    ``score_pairs_indexed`` + votes + ranking for stage 2. Spark only
+    reads the corpus tables, through filtered scans with no shuffle and no
+    Python worker: idf rows of the batch's tokens, entities sharing a
+    batch name key (broadcast join), and the mention_feats rows of the
+    surviving clusters' members (broadcast cluster-id join).
+
+    The driver holds the batch, the idf rows of its tokens, its candidate
+    entities and the members of surviving clusters — never the whole
+    vocabulary. Unlike a lazy plan, the call reads the corpus tables
+    eagerly; the returned DataFrame is built from the driver-side result.
+
+    Batch-friendly: pass MANY query pages in one call and each lookup
+    runs ONCE for the whole batch (the analog of ref
+    record_based_query_exp2.py:124-150's per-name-key profile cache; here
+    a cluster's profile is also hashed once per call). Tested with a
+    100-query batch in tests/test_query.py."""
+    spark = query_pages.sparkSession
+    qf = _query_feats(query_pages, idf)
+    res = _ranked(qf, _candidates(qf, entities), clusters, mention_feats)
+    out = pd.DataFrame({
+        "q_url": res["q_url"].astype(object),
+        "cluster_id": res["cluster_id"].astype("int64"),
+        "votes": res["votes"].astype("int64"),
+        "cluster_cos": res["cluster_cos"].astype("float64"),
+        "rank": res["rank"].astype("int32")})
+    # Spark's round (HALF_UP on the decimal value), not Python's
+    return (spark.createDataFrame(out, RESULT_SCHEMA)
+            .select("q_url", "cluster_id", "votes",
+                    F.round("cluster_cos", 9).alias("cluster_cos"),
+                    "rank"))
